@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -140,7 +141,7 @@ object Bench {
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")),
         java.nio.charset.StandardCharsets.UTF_8).trim.split(" ")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
     val load0 = loadavg()
     Tables.cacheAll(spark, sfDir)
     // The warmup pass is also the MEMO-WARMER: trained-structure queries
@@ -151,7 +152,7 @@ object Bench {
     // read as a regression when an arbiter compares fresh-host runs.
     val warmSecs: Map[String, Double] = SparkEntry.queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      try fn(spark, sfDir).count() catch { case NonFatal(_) => () }
       name -> (System.nanoTime() - t0) / 1e9
     }
     val load1 = loadavg()
@@ -159,7 +160,7 @@ object Bench {
     // carry ±0.3 s GC/scheduler noise that would drown real regressions.
     def timedPass(): Map[String, Double] = SparkEntry.queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { fn(spark, sfDir).count(); true } catch { case NonFatal(_) => false }
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
     val p1 = timedPass()
@@ -182,7 +183,7 @@ object Bench {
       val fn = SparkEntry.queries(k)
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
+      catch { case NonFatal(_) => -1.0 }
     }
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
     val qs = results.toSeq.sortBy(_._1)

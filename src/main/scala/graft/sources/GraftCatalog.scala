@@ -251,7 +251,6 @@ class GraftCatalog extends TableCatalog
           name.matches("manifest-\\d+\\.json") ||
             name.startsWith("data-") || name.startsWith("delete-") ||
             name.startsWith("batch-") || name.startsWith(".merge_stage_") ||
-            name.startsWith(".merge_keys_") ||
             // commit-staging debris (a crashed commit's temp file) and
             // two-level child manifests are engine artifacts too
             name.startsWith(".manifest_stage") || name.startsWith("group-")

@@ -1009,10 +1009,11 @@ object ManifestTable {
       // expired history (referenced by an OLD manifest being deleted
       // below) sweeps immediately; a file referenced by NO manifest at
       // all may be an in-flight writer's just-linked data (mergeKeys
-      // publishes its key file and hard-links its rows BEFORE the
-      // commit), so the never-referenced set gets the same 1 h age gate
-      // as the staging dirs — a crashed job's debris is hours old, a
-      // live merge's links are seconds old
+      // writes its key file — a request-sized key set, collected on the
+      // driver like every scan's and deleteKeys' — and hard-links its
+      // rows BEFORE the commit), so the never-referenced set gets the
+      // same 1 h age gate as the staging dirs — a crashed job's debris
+      // is hours old, a live merge's links are seconds old
       val expired: Set[String] = oldManifests.iterator.flatMap(reachable).toSet
       val sweepBefore = System.currentTimeMillis() - 3600000L
       val orphans = names.filter { n =>
@@ -1034,7 +1035,7 @@ object ManifestTable {
       // (1 h) on the dir's HEARTBEAT mtime — mergeKeys re-touches its
       // scratch after every step, so a live merge is never swept from
       // under it no matter how long any single step takes.
-      names.filter(n => n.startsWith(".merge_stage_") || n.startsWith(".merge_keys_"))
+      names.filter(_.startsWith(".merge_stage_"))
         .map(n => d.resolve(n))
         .filter(p => Files.isDirectory(p) &&
           Files.getLastModifiedTime(p).toMillis < sweepBefore)
@@ -1202,12 +1203,18 @@ object ManifestTable {
         s"deleteKeys: no column '$keyCol' in ${schema.toDDL}"))
     require(f.dataType == LongType || f.dataType == IntegerType,
       s"deleteKeys: equality deletes support integral key columns; '$keyCol' is ${f.dataType}")
-    val d = dir(path)
-    val name = s"delete-${java.util.UUID.randomUUID().toString.take(8)}.keys"
-    Files.write(d.resolve(name),
-      keys.distinct.sorted.map(_.toString).asJava, StandardCharsets.UTF_8)
+    val name = writeDeleteKeyFile(dir(path), keys)
     commitVersion(path, Seq(s"$DeleteMark$name\t$keyCol"),
       replacePrev = false, schemaDdl = None)
+  }
+
+  /** Writes `keys` as a new `delete-*.keys` file in `d` — one distinct key
+    * per line, ascending — and returns its name. */
+  private def writeDeleteKeyFile(d: Path, keys: Iterable[Long]): String = {
+    val name = s"delete-${java.util.UUID.randomUUID().toString.take(8)}.keys"
+    Files.write(d.resolve(name),
+      keys.toSeq.distinct.sorted.map(_.toString).asJava, StandardCharsets.UTF_8)
+    name
   }
 
   /** MERGE / UPSERT (merge-on-read): apply `updates` — full rows in the
@@ -1225,21 +1232,20 @@ object ManifestTable {
     * simply insert (the delete of a non-existent key is a no-op) — the
     * standard MERGE WHEN MATCHED / NOT MATCHED pair.
     *
-    * Scale + crash shape: the update rows are staged by a DISTRIBUTED
+    * Scale + crash shape: the update rows are staged by ONE distributed
     * DSv2 write into a dot-prefixed scratch dir, hard-linked into the
-    * table, and published by the shared optimistic [[commitVersion]];
-    * the key list renders through a Spark write as well (no row
-    * collect) and is delete-list-bounded AT READ time by the same
-    * argument as [[deleteKeys]] (update batches are request-sized
-    * relative to the table; a table-sized rewrite is [[compactDeletes]]'
-    * job). A crash before the commit leaves only unreferenced files —
-    * swept by [[vacuum]], invisible to every reader. Returns the
-    * committed version.
+    * table, and published by the shared optimistic [[commitVersion]].
+    * The delete key file is collected on the driver from the key column
+    * of the staged data files: delete key sets are request-sized (update
+    * batches are small relative to the table; a table-sized rewrite is
+    * [[compactDeletes]]' job), and every scan and [[deleteKeys]] already
+    * hold them on the driver. A crash before the commit leaves only
+    * unreferenced files — swept by [[vacuum]], invisible to every
+    * reader. Returns the committed version.
     *
-    * `updates` is evaluated TWICE (row staging, key render) and must be
-    * DETERMINISTIC — a sampled or otherwise nondeterministic frame could
-    * stage one row set and delete another's keys. The same contract as
-    * any retried Spark write.
+    * `updates` is evaluated ONCE, by the staging write; the keys are read
+    * back from the staged rows, so even a nondeterministic frame cannot
+    * stage one row set and tombstone a different key set.
     */
   def mergeKeys(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -1257,17 +1263,13 @@ object ManifestTable {
     val d = dir(path)
     Files.createDirectories(d)
     val scratch = Files.createTempDirectory(d, ".merge_stage_")
-    val keysDir = Files.createTempDirectory(d, ".merge_keys_")
     // heartbeat for vacuum's liveness gate: every step re-touches the
-    // scratch dirs, so the 1 h sweep threshold measures time since the
-    // merge last MADE PROGRESS, not time since it started — a slow key
-    // render or a long optimistic-retry fight can't get its scratch
-    // swept mid-merge
-    def heartbeat(): Unit = {
-      val now = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis())
-      Files.setLastModifiedTime(scratch, now)
-      Files.setLastModifiedTime(keysDir, now)
-    }
+    // scratch dir, so the 1 h sweep threshold measures time since the
+    // merge last MADE PROGRESS, not time since it started — a slow
+    // staging write or a long optimistic-retry fight can't get its
+    // scratch swept mid-merge
+    def heartbeat(): Unit = Files.setLastModifiedTime(scratch,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
     try {
       // 1. stage the update rows as manifest data files (distributed) —
       //    the ONLY evaluation of `updates`; everything downstream
@@ -1285,20 +1287,22 @@ object ManifestTable {
         currentManifest(scratch.toString).getOrElse(throw new IllegalStateException(
           s"mergeKeys: staging write produced no manifest at $scratch"))._2)
         .map(stripSeq)
-      // 2. stage the key file, rendered by Spark FROM THE STAGED ROWS
-      //    (one small text file; no second pass over `updates`)
-      val keysOut = keysDir.resolve("out")
-      spark.read.format("graft.sources.ManifestTable")
-        .option("path", scratch.toString).load()
-        .select(keyCol).distinct()
-        .selectExpr(s"CAST($keyCol AS STRING) AS k")
-        .coalesce(1).write.mode("overwrite").text(keysOut.toString)
-      heartbeat()
-      val keysPart = keysOut.toFile.listFiles()
-        .find(x => x.getName.startsWith("part-")).getOrElse(
-          throw new IllegalStateException("mergeKeys: key render wrote no part file"))
-      val delName = s"delete-${java.util.UUID.randomUUID().toString.take(8)}.keys"
-      Files.move(keysPart.toPath, d.resolve(delName))
+      // 2. the key file, read on the driver FROM THE STAGED ROWS: just
+      //    the key column of each staged file, non-null keys widened
+      //    to Long
+      val wanted = StructType(Seq(f))
+      val keys = scala.collection.mutable.HashSet.empty[Long]
+      dataLines.foreach { l =>
+        val r = ManifestCodec.openReader(
+          scratch.resolve(parseEntry(l)._1).toString, schema, wanted)
+        try while (r.next()) {
+          val row = r.get()
+          if (!row.isNullAt(0))
+            keys += (if (f.dataType == IntegerType) row.getInt(0).toLong
+                     else row.getLong(0))
+        } finally r.close()
+      }
+      val delName = writeDeleteKeyFile(d, keys)
       // 3. adopt the staged data files (hard links — same filesystem)
       dataLines.foreach { l =>
         val name = parseEntry(l)._1
@@ -1318,7 +1322,7 @@ object ManifestTable {
           .forEach(x => Files.deleteIfExists(x))
         finally walk.close()
       }
-      rmTree(scratch); rmTree(keysDir)
+      rmTree(scratch)
     }
   }
 

@@ -1,7 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.ManifestTable
@@ -9,7 +15,9 @@ import graft.sources.ManifestTable
 /** MERGE/upsert lifecycle on the manifest table: one-version atomicity
   * (the merge's delete never kills its own inserts — the sequencing rule),
   * matched keys replaced exactly once, novel keys inserted, history
-  * intact, fold + vacuum behavior, and schema/key validation.
+  * intact, fold + vacuum behavior, schema/key validation, one Spark job
+  * per merge, and the delete key file's content on duplicate, null and
+  * IntegerType keys.
   */
 class ManifestMergeSpec extends AnyFunSuite with SparkSessionFixture {
 
@@ -99,6 +107,85 @@ class ManifestMergeSpec extends AnyFunSuite with SparkSessionFixture {
     intercept[IllegalArgumentException] {
       ManifestTable.mergeKeys(spark, dir, "s",
         Seq((1L, "x", 0L)).toDF("id", "s", "v"))
+    }
+  }
+
+  /** Spark jobs `op` starts from this thread (tagged by a job group, so
+    * a stream another suite left running can't add to the count). */
+  private def jobsStartedBy(op: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"merge-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try { op; ListenerBusDrain.drain(sc); jobs.get() }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  test("one job per merge: as many jobs as a plain append; no scratch left") {
+    val dir = freshTable()
+    // shuffle-free: a local relation, staged without an exchange
+    val updates = Seq((3L, "row3x", 999L), (30L, "row30", 300L)).toDF("id", "s", "v")
+    val empty = Files.createTempDirectory("graft_manifest_merge_append").toString
+    val appendJobs = jobsStartedBy {
+      updates.write.format(Fmt).option("path", empty).mode("append").save()
+    }
+    val mergeJobs = jobsStartedBy { ManifestTable.mergeKeys(spark, dir, "id", updates) }
+    assert(appendJobs >= 1)
+    assert(mergeJobs == appendJobs,
+      s"mergeKeys started $mergeJobs jobs, a plain append $appendJobs")
+    val listing = Files.list(Paths.get(dir))
+    val scratch = try listing.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith(".merge_stage_") || n.startsWith(".merge_keys_")).toList
+    finally listing.close()
+    assert(scratch.isEmpty, s"merge scratch left behind: $scratch")
+  }
+
+  /** A table keyed on `id` of `keyType` (rows 1..6), and an update batch
+    * with a duplicated matched key, a novel key and a null key. */
+  private def edgeCase(keyType: String): (String, DataFrame, DataFrame) = {
+    val dir = Files.createTempDirectory("graft_manifest_merge_edge").toString
+    val base = (1 to 6).map(i => (Option(i.toLong), s"row$i")).toDF("id", "s")
+      .selectExpr(s"CAST(id AS $keyType) AS id", "s")
+    base.write.format(Fmt).option("path", dir).mode("append").save()
+    val updates = Seq((Option(4L), "four-a"), (Option(2L), "two"),
+        (Option(4L), "four-b"), (None, "nokey"), (Option(9L), "nine"))
+      .toDF("id", "s").selectExpr(s"CAST(id AS $keyType) AS id", "s")
+    (dir, base, updates)
+  }
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toString).sorted
+
+  for (keyType <- Seq("BIGINT", "INT")) {
+    test(s"merge scan == anti-join + union reference ($keyType key, dup + null keys)") {
+      val (dir, base, updates) = edgeCase(keyType)
+      // the reference: every base row whose key no update row carries,
+      // plus every update row (the null-key row inserts, matching nothing)
+      val expected = base.join(updates.select("id").where("id IS NOT NULL"),
+          Seq("id"), "left_anti").unionByName(updates)
+      ManifestTable.mergeKeys(spark, dir, "id", updates)
+      val got = spark.read.format(Fmt).option("path", dir).load()
+      assert(rowsOf(got) == rowsOf(expected))
+      assert(rowsOf(got.where("id = 4")) == Seq("[4,four-a]", "[4,four-b]"),
+        "the matched key's old row is gone; both update rows land")
+      assert(rowsOf(got.where("id IS NULL")) == Seq("[null,nokey]"))
+    }
+
+    test(s"the delete key file lists the sorted distinct non-null keys ($keyType key)") {
+      val (dir, _, updates) = edgeCase(keyType)
+      ManifestTable.mergeKeys(spark, dir, "id", updates)
+      val dels = ManifestTable.deleteEntriesOf(ManifestTable.currentManifest(dir).get._2)
+      assert(dels.map(_._2) == Seq("id"))
+      val keyLines = Files.readAllLines(Paths.get(dir).resolve(dels.head._1),
+        StandardCharsets.UTF_8).asScala.toSeq
+      assert(keyLines == Seq("2", "4", "9"))
     }
   }
 }
